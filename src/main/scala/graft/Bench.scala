@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = Session()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: touch every table (footers into page cache), then run the
     // whole query set once at the tiny smoke SF — Spark caches generated
@@ -63,21 +53,36 @@ object Bench {
     // (same methodology/statistic as every prior round — comparable); the
     // median and per-rep spread go to stderr as diagnostics.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
+    // A failed rep is reported and left out of the min and the median: a
+    // query that throws fast must not read as a fast query.
+    val timed = SparkEntry.queries.map { case (name, fn) =>
+      val times = (1 to reps).flatMap { i =>
         System.gc()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name rep $i FAILED: ${e.getMessage}")
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache() // intra-query caches must not leak across timings
-        dt
+        if (ok) Some(dt) else None
       }
       val sorted = times.sorted
-      val median = sorted(sorted.size / 2)
-      System.err.println(
-        f"[bench] $name%-24s min=${sorted.head}%.3f median=$median%.3f " +
-          f"max=${sorted.last}%.3f reps=$reps")
-      name -> (sorted.head, median)
+      if (sorted.nonEmpty) System.err.println(
+        f"[bench] $name%-24s min=${sorted.head}%.3f median=${sorted(sorted.size / 2)}%.3f " +
+          f"max=${sorted.last}%.3f reps=${sorted.size}/$reps")
+      name -> sorted
+    }
+    val failed = timed.collect { case (name, ts) if ts.isEmpty => name }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] no successful rep: ${failed.toSeq.sorted.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
+    val results = timed.map { case (name, sorted) =>
+      name -> (sorted.head, sorted(sorted.size / 2))
     }
     val qs = results.map { case (k, (mn, _)) => s"\"" + k + "\":" + mn }
       .mkString("{", ",", "}")

@@ -35,25 +35,7 @@ object Cleaner {
   def normalize(c: Column): Column =
     trim(regexp_replace(regexp_replace(c, "<[^>]*>", " "), "[\\n\\t ]+", " "))
 
-  /** P7: cell → null when it contains any blacklist phrase. */
-  def nullIfBlacklisted(c: Column): Column =
-    when(c.rlike(blacklistRe), lit(null)).otherwise(c)
-
-  /** P9: cell → null when it matches a boilerplate content pattern. */
-  def nullIfBoilerplate(c: Column): Column =
-    when(c.rlike(removalRe), lit(null)).otherwise(c)
-
-  /** P8: cell → null when shorter than the per-column minimum
-    * (content_cleaner.py:88-94: title 20, description 100, body 400,
-    * paragraph 150).
-    */
-  def nullIfShort(c: Column, minLen: Int): Column =
-    when(length(c) < minLen, lit(null)).otherwise(c)
-
-  /** P10: whitespace-only cell → null. */
-  def nullIfBlank(c: Column): Column =
-    when(c.rlike("^\\s*$"), lit(null)).otherwise(c)
-
+  /** P8: per-column minimum length (content_cleaner.py:88-94). */
   val minLens: Map[String, Int] =
     Map("title" -> 20, "description" -> 100, "body" -> 400, "paragraph" -> 150)
 

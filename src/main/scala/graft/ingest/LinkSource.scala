@@ -73,9 +73,11 @@ object LinkExtractor {
   }
 
   /** S6/U1/J3/O1: fan out all engines, cap each at `maxArticles`, decode
-    * links, union, and dedup by URL keeping the LAST engine's record
-    * (arrival order = source position, as the reference's dict-overwrite
-    * does at link_extractor.py:558).
+    * links, union, and dedup by URL keeping the LAST record, as the
+    * reference's dict-overwrite does at link_extractor.py:558: the last
+    * engine (arrival order = source position) and, when one engine lists a
+    * URL twice, its later result. The result position is the engine
+    * frame's row order, which `monotonically_increasing_id` follows.
     */
   def allLinks(spark: SparkSession, query: String, maxArticles: Int,
                sources: Seq[LinkSource] = defaultSources): DataFrame = {
@@ -84,10 +86,12 @@ object LinkExtractor {
         .limit(maxArticles)
         .withColumn("se_link", decodeLink(col("se_link")))
         .withColumn("arrival", lit(i))
+        .withColumn("position", monotonically_increasing_id())
     }
     val all = perEngine.reduce(_ unionByName _)
-    val w = Window.partitionBy(col("se_link")).orderBy(col("arrival").desc)
+    val w = Window.partitionBy(col("se_link"))
+      .orderBy(col("arrival").desc, col("position").desc)
     all.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn", "arrival")
+      .filter(col("rn") === 1).drop("rn", "arrival", "position")
   }
 }

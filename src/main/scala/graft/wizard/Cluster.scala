@@ -8,6 +8,8 @@ import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.linalg.{Vector => MlVector, Vectors}
 import org.apache.spark.storage.StorageLevel
+import java.util.UUID
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 
 /** Clustering + dimensionality reduction (reference word_wizard.py:233-296,
   * 513-559, 675-717 — operators B3/B7).
@@ -73,32 +75,32 @@ object Cluster {
     * Candidate fits are independent jobs over the SAME persisted frame, so
     * they run from a small driver thread pool (guide-standard overlap): the
     * tail tasks of one k's fit no longer leave the cluster idle while the
-    * next k waits. `poolWidth` fits in flight (3 by default) is enough to
-    * fill stragglers without thrashing executors; each (k, seed) fit is
-    * deterministic, so completion order cannot change which model wins.
+    * next k waits. Three fits in flight are enough to fill stragglers
+    * without thrashing executors (r22: 14.10 s → 6.01 s against one); each
+    * (k, seed) fit is deterministic, so completion order cannot change
+    * which model wins.
     *
-    * Failure path (r22): a failed fit cancels the whole scan's job group
-    * and shuts the pool down hard BEFORE the frame is unpersisted —
-    * otherwise queued/in-flight sibling fits keep running against an
-    * unpersisted frame and recompute it from scratch as leaked jobs.
+    * Failure path: the FIRST failed fit, whatever its k, cancels the scan's
+    * job group (current and future jobs) and shuts the pool down hard
+    * before the frame is unpersisted — otherwise queued/in-flight sibling
+    * fits keep running against an unpersisted frame and recompute it from
+    * its source as leaked jobs.
     */
   def kmeansSilhouette(df: DataFrame, vecCol: String, outCol: String,
                        kMin: Int = 2, kMax: Int = 15,
-                       seed: Long = 42L, poolWidth: Int = 3): (Int, DataFrame) = {
+                       seed: Long = 42L): (Int, DataFrame) = {
     require(kMax > kMin && kMin >= 2, s"need 2 <= kMin < kMax, got [$kMin,$kMax)")
-    require(poolWidth >= 1, s"poolWidth=$poolWidth must be >= 1")
     val tmp = vecCol + "_mlvec"
     val withVec = df.withColumn(tmp, toVec(col(vecCol)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    withVec.count() // materialize ONCE before concurrent fits race to fill it
     val sc = df.sparkSession.sparkContext
-    val group = s"kmeansSilhouette[$kMin,$kMax)@${System.identityHashCode(df)}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolWidth)
+    val group = s"kmeansSilhouette-${UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(3)
     try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = (kMin until kMax).map { k =>
-        scala.concurrent.Future {
+      withVec.count() // materialize ONCE before concurrent fits race to fill it
+      val fits = new ExecutorCompletionService[(Int, Double, KMeansModel)](pool)
+      (kMin until kMax).foreach { k =>
+        fits.submit { () =>
           // job group is thread-local: set it in the pool thread so a
           // failure can cancel every sibling fit's in-flight jobs
           sc.setJobGroup(group, s"silhouette fit k=$k", interruptOnCancel = true)
@@ -111,20 +113,26 @@ object Cluster {
           (k, s, m)
         }
       }
+      // take() hands fits back in completion order, so the first fit to
+      // fail surfaces at once instead of behind slower, smaller k
       val scored =
-        try futures.map(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
+        try (kMin until kMax).map(_ => fits.take().get())
         catch { case e: Throwable =>
-          sc.cancelJobGroup(group) // stop in-flight sibling fits
-          throw e
+          sc.cancelJobGroupAndFutureJobs(group)
+          throw (e match {
+            case x: ExecutionException if x.getCause != null => x.getCause
+            case x => x
+          })
         }
       val (bestK, _, bestM) = scored.maxBy(t => (t._2, -t._1))
       (bestK, bestM.transform(withVec).drop(tmp))
     } finally {
       // shutdownNow, not shutdown: on the failure path plain shutdown()
-      // leaves queued fits to start AFTER the unpersist below (on the
-      // success path the queue is empty, so the two are equivalent)
+      // leaves queued fits to start AFTER the unpersist below. Waiting for
+      // the interrupted fits to return keeps any of them from touching the
+      // frame after it is dropped (on the success path the pool is idle).
       pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
       withVec.unpersist()
     }
   }

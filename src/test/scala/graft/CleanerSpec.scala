@@ -12,24 +12,24 @@ class CleanerSpec extends SparkSpec {
     assert(got == "a b c d")
   }
 
-  test("nullIfBlacklisted nulls on case-insensitive phrase hit") {
-    val got = Seq("Please SUBSCRIBE now", "fine text").toDF("t")
-      .select(Cleaner.nullIfBlacklisted($"t")).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, Some("fine text")))
+  /** Rows of a one-column frame that survive `Cleaner.clean` on it. */
+  private def survivors(column: String, rows: String*): Seq[String] =
+    Cleaner.clean(rows.toDF(column), Seq(column)).collect.map(_.getString(0)).toSeq
+
+  test("clean drops a cell with a blacklist phrase, case-insensitively") {
+    assert(survivors("t", "Please SUBSCRIBE now", "fine text") == Seq("fine text"))
   }
 
-  test("nullIfBoilerplate nulls urls/emails/phones/tags") {
-    val rows = Seq("see https://x.io/a", "mail a.b@x.io ok",
+  test("clean drops cells with urls/emails/phones; tags are stripped, not flagged") {
+    // normalize removes tags before the flag runs, so the tag row survives
+    // as plain text
+    val got = survivors("t", "see https://x.io/a", "mail a.b@x.io ok",
       "call +1 (415) 555-0199 now", "has <div> tag", "clean prose")
-    val got = rows.toDF("t")
-      .select(Cleaner.nullIfBoilerplate($"t")).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, None, None, None, Some("clean prose")))
+    assert(got == Seq("has tag", "clean prose"))
   }
 
-  test("nullIfShort respects per-column minimum") {
-    val got = Seq("short", "long enough indeed!!").toDF("t")
-      .select(Cleaner.nullIfShort($"t", 20)).collect.map(r => Option(r.getString(0)))
-    assert(got.toSeq == Seq(None, Some("long enough indeed!!")))
+  test("clean drops cells shorter than the column minimum") {
+    assert(survivors("title", "short", "long enough indeed!!") == Seq("long enough indeed!!"))
   }
 
   test("body is exempt from blacklist and boilerplate nulling (content_cleaner.py:81-85,121-122)") {

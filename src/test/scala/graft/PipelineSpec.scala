@@ -26,6 +26,24 @@ class PipelineSpec extends SparkSpec {
     links.unpersist()
   }
 
+  test("allLinks: an engine's repeated URL keeps its later result at any shuffle width") {
+    // Yahoo lists article-(i % 50) as results i and i + 50; result i is a
+    // null link when i % 17 == 16 (the fixture's dropEvery)
+    val expected = (0 until 50).flatMap { j =>
+      Seq(j + 50, j).find(_ % 17 != 16).map(i => s"Yahoo result about test topic #$i")
+    }.toSet
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    for (partitions <- Seq("1", "8")) {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+      try {
+        val titles = LinkExtractor.allLinks(spark, "test topic", 100)
+          .filter($"engine" === "Yahoo" && $"se_link".isNotNull)
+          .select("se_title").as[String].collect().toSet
+        assert(titles == expected, s"shuffle partitions $partitions")
+      } finally spark.conf.set("spark.sql.shuffle.partitions", width)
+    }
+  }
+
   test("MainContent picks the hierarchy with most text, in document order") {
     val html = """<html><body>
       |<div class="nav"><p>one</p><p>two</p></div>

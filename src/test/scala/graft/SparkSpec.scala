@@ -4,18 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (JVM startup dominates;
-  * suites must not stop() it).
+  * suites must not stop() it). Built by the same factory as Bench and
+  * Verify, so specs run the semantics those entry points run.
   */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val s = Session()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

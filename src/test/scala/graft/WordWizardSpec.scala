@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.wizard.WordWizard
+import graft.wizard.{Cluster, WordWizard}
 
 class WordWizardSpec extends SparkSpec {
   import spark.implicits._
@@ -105,5 +105,22 @@ class WordWizardSpec extends SparkSpec {
     val cl = "paragraph_sentence_embeddings_clusters"
     val ks = w.df.select(col(cl)).distinct().count()
     assert(ks >= 2 && ks <= 4)
+  }
+
+  test("silhouette scan: a failed fit rethrows, leaves no job running, releases its frame") {
+    val sc = spark.sparkContext
+    // vectors of mixed length make every KMeans fit throw
+    val ragged = (0 until 40).map(i => Array.fill(2 + i % 2)(i.toFloat)).toDF("v")
+    val e = intercept[Exception] {
+      Cluster.kmeansSilhouette(ragged, "v", "cl", kMin = 2, kMax = 8)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    // cancellation is asynchronous in the scheduler: allow it a moment
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    // the scan's cached frame is named after its plan, which projects v_mlvec
+    assert(!sc.getPersistentRDDs.values.exists(r => Option(r.name).exists(_.contains("v_mlvec"))))
   }
 }
